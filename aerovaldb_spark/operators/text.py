@@ -2856,13 +2856,15 @@ def _verified_dots(
     shape: str = "auto",
 ) -> DataFrame:
     """(left_id, right_id, dot): the exact DECIMAL dot of round6'd
-    per-term products over candidate pairs, in one of two selectable
-    plan shapes (bit-identical by construction — both sum the SAME
+    per-term products over candidate pairs, in one of three selectable
+    plan shapes (bit-identical by construction — all sum the SAME
     decimal terms, and decimal addition is exact and order-free;
     property-tested equal on fuzzed corpora):
 
-    - ``map``: join each side's (doc -> weight map) onto the candidate
-      list and fold with map_zip_with. Carries both WHOLE vectors per
+    - ``map``: join each side's per-doc vector onto the candidate list
+      — sorted term-id/weight parallel arrays — and compute each
+      pair's dot as one vectorized Arrow merge-intersect
+      (:func:`_arrow_micros`). Carries both WHOLE vectors per
       candidate but avoids exploding to (pair, term) rows and
       re-aggregating — wins when docs are short or candidates share
       most of their mass (the near-dup regime; removed a ~260M-row
@@ -2872,22 +2874,24 @@ def _verified_dots(
       (<= min(|a|, |b|) per pair) at the price of the exchange +
       groupBy — the right shape for very long documents with thin
       overlaps.
-
-    Both shapes left-join back onto the candidate list and emit dot=0
-    for pairs that share zero terms OR reference a doc absent from the
-    weight frame (zero-norm), so the equivalence holds for ANY
-    candidate frame, not only under a positive-threshold filter
-    downstream.
     - ``map_fold``: the map shape's previous pure-JVM form — (term →
-      weight) map columns joined per candidate and folded per pair.
-      Selectable for cross-checks and environments without a Python
-      worker; pinned bit-equal to ``map`` in tests.
-    - ``auto``: ``keyed`` iff either side's avg terms/doc exceeds
-      TFIDF_VERIFY_KEYED_MIN_AVG_TERMS, else ``map``. NOTE: this probe is an EAGER
-      Spark action (one tiny aggregate per distinct side) executed at
-      plan-CONSTRUCTION time; the weight frames are scoped_persist'd
-      by their builders, so it materializes the cache the main plan
-      reads rather than doing the pipeline twice.
+      weight) map columns joined per candidate and folded per pair
+      with map_zip_with. Selectable for cross-checks and environments
+      without a Python worker; pinned bit-equal to ``map`` in tests.
+
+    All three shapes left-join back onto the candidate list and emit
+    dot=0 for pairs that share zero terms OR reference a doc absent
+    from the weight frame (zero-norm), so the equivalence holds for
+    ANY candidate frame, not only under a positive-threshold filter
+    downstream.
+
+    ``auto``: ``keyed`` iff either side's avg terms/doc exceeds
+    TFIDF_VERIFY_KEYED_MIN_AVG_TERMS, else ``map``; it never picks
+    ``map_fold``, which is selectable only explicitly. NOTE: this
+    probe is an EAGER Spark action (one tiny aggregate per distinct
+    side) executed at plan-CONSTRUCTION time; the weight frames are
+    scoped_persist'd by their builders, so it materializes the cache
+    the main plan reads rather than doing the pipeline twice.
     """
     if shape == "auto":
         avg = _avg_terms_per_doc(left_w)
@@ -3046,8 +3050,8 @@ def tfidf_cosine_knn(
 
     NOTE: the default ``verify_shape='auto'`` runs one small EAGER
     aggregate at construction time to pick the verify plan shape (see
-    :func:`_verified_dots`); pass ``'map'`` or ``'keyed'`` explicitly
-    for fully lazy composition.
+    :func:`_verified_dots`); pass ``'map'``, ``'keyed'`` or
+    ``'map_fold'`` explicitly for fully lazy composition.
     """
     w, _stats, _n = tfidf_weight_frame(docs)
     cand = tfidf_allpairs_candidates(w, threshold)
@@ -3798,8 +3802,8 @@ def tfidf_screen_join(
 
     NOTE: the default ``verify_shape='auto'`` runs one small EAGER
     aggregate per side at construction time to pick the verify plan
-    shape (see :func:`_verified_dots`); pass ``'map'`` or ``'keyed'``
-    explicitly for fully lazy composition.
+    shape (see :func:`_verified_dots`); pass ``'map'``, ``'keyed'``
+    or ``'map_fold'`` explicitly for fully lazy composition.
     """
     w_in, w_ref = _screen_weight_frames(incoming, reference)
     return _screen_verify(incoming, w_in, w_ref, threshold, verify_shape)

@@ -664,14 +664,21 @@ def test_tfidf_verify_shapes_bit_equal_fuzzed(spark, tmp_path_factory):
 
 
 def test_tfidf_verify_auto_switch(spark):
-    """auto picks the Arrow map plan on a dense (candidate-flooded)
-    corpus, the pure-JVM map_fold once avg document frequency drops
-    below the documented threshold (the pruned regime where the Arrow
-    machinery's fixed costs outweigh its per-pair win), and the keyed
-    plan once avg terms/doc crosses its threshold — observable in the
-    analyzed plan (only the Arrow map form verifies through the
-    merge-intersect's `_micros` column; only keyed drops the map
-    carry)."""
+    """auto chooses between the Arrow ``map`` plan and the ``keyed``
+    plan on avg terms/doc alone — ``keyed`` iff either side's avg
+    terms/doc exceeds TFIDF_VERIFY_KEYED_MIN_AVG_TERMS, else ``map``
+    (the ``_verified_dots`` docstring; SCALING.md, "Data-driven TF-IDF
+    verification shape") — observable in the analyzed plan: only the
+    Arrow map form verifies through the merge-intersect's `_micros`
+    column, and `map_zip_with` appears only in the pure-JVM
+    ``map_fold`` form, which auto never picks.
+
+    Three corpora: the dense sf0.001 template corpus stays on ``map``;
+    a short-document, near-disjoint-vocabulary corpus also stays on
+    ``map`` (low avg document frequency does not move it), finds its
+    one planted near-dup pair and matches an explicit ``map_fold``
+    row for row, whose plan carries the fold's markers; a long-doc
+    corpus flips to ``keyed`` and agrees with ``map``."""
     from aerovaldb_spark.catalog import load_table
     from aerovaldb_spark.operators.text import (
         TFIDF_VERIFY_KEYED_MIN_AVG_TERMS,
@@ -679,7 +686,7 @@ def test_tfidf_verify_auto_switch(spark):
     )
 
     # template corpus: small shared vocabulary -> avg df ~365 at
-    # sf0.001 (measured), well above the Arrow threshold
+    # sf0.001 (measured), ~25 avg terms/doc: the Arrow map plan
     dense = load_table(spark, "/root/testdata/sf0.001", "documents")
     plan_dense = (
         tfidf_cosine_knn(dense)._jdf.queryExecution().analyzed().toString()
@@ -687,9 +694,9 @@ def test_tfidf_verify_auto_switch(spark):
     assert "_micros" in plan_dense
 
     # near-disjoint vocabularies (one shared near-dup pair): avg df
-    # ~1, below the threshold — auto must fall back to the pure-JVM
-    # fold (no Arrow column, but still the map carry: map_zip_with
-    # appears only in the fold)
+    # ~1, and <= 370 weight rows over 32 docs (~11.6 avg terms/doc,
+    # well under the keyed threshold) — auto stays on the Arrow map
+    # plan, with no fold in it
     sparse_docs = spark.createDataFrame(
         [(i, " ".join(f"t{i}_{j}" for j in range(12)))
          for i in range(30)]
@@ -703,13 +710,21 @@ def test_tfidf_verify_auto_switch(spark):
         .analyzed()
         .toString()
     )
-    assert "_micros" not in plan_sparse
-    assert "map_zip_with" in plan_sparse
-    # and the fold regime still finds the planted duplicate pair
+    assert "_micros" in plan_sparse
+    assert "map_zip_with" not in plan_sparse
+    # the explicit fold on the same corpus: no Arrow column, but the
+    # map carry (map_zip_with appears only in the fold)
+    fold_df = tfidf_cosine_knn(sparse_docs, verify_shape="map_fold")
+    plan_fold = fold_df._jdf.queryExecution().analyzed().toString()
+    assert "_micros" not in plan_fold
+    assert "map_zip_with" in plan_fold
+    # auto still finds the planted duplicate pair
     got = tfidf_cosine_knn(sparse_docs).collect()
     assert {(r["doc_id"], r["neighbor_id"]) for r in got} == {
         (100, 101), (101, 100)
     }
+    # and equals the fold row for row
+    assert sorted(map(tuple, got)) == sorted(map(tuple, fold_df.collect()))
 
     # two identical long docs + one disjoint doc: the shared terms
     # have df=2 of 3 (idf > 0 — terms in EVERY doc would weigh zero),
